@@ -64,20 +64,6 @@ def l2_norm_sql(a: str) -> str:
 # thousands.
 
 
-#: r15: the r14 ``asNondeterministic`` marking on :func:`dot_pandas`
-#: is REVERTED (False).  The r14 rationale (guide §4.4 — stop the
-#: optimizer cloning the UDF around a pushed-down filter) was plan-
-#: real but harmless here: the duplicated ArrowEvalPython runs ABOVE
-#: the threshold filter, i.e. only on the filter's survivors (18 rows
-#: at sf0.1), so the duplication costs ~nothing — while the
-#: nondeterministic flag itself measured SLOWER on two independent
-#: hosts (driver r14: 1.32→1.79 s at 32c AND 2.21 s at 8c; this host
-#: r15 interleaved A/B over 8 cycles: nondet min/median 1.188/1.655 s
-#: vs plain 1.020/1.297 s, plain faster in 6/8 cycles).  Flag kept as
-#: the A/B switch (tools/ab_r15.py).
-_DOT_NONDET = False
-
-
 def dot_pandas(a: Column, b: Column) -> Column:
     """Arrow-batched dot product, bit-identical to :func:`dot`.
 
@@ -105,16 +91,4 @@ def dot_pandas(a: Column, b: Column) -> Column:
             acc = acc + prods[:, i]
         return pd.Series(acc)
 
-    # r14 (guide §4.4): mark non-deterministic so the optimizer cannot
-    # push a filter on the RESULT below the projection and duplicate
-    # the evaluation — dedup_embedding's `cos >= threshold` filter
-    # produced TWO ArrowEvalPython nodes over the same pair set
-    # (plans/r14/dedup_embedding_before.txt nodes 18/21), shipping
-    # both embedding arrays across the Python boundary twice.  The
-    # value is deterministic in reality; the flag only removes the
-    # optimizer's licence to clone it.  (_DOT_NONDET is the r15 A/B
-    # switch — the driver's r14 timings contradicted the win, so
-    # tools/ab_r15.py re-measures both forms interleaved.)
-    if _DOT_NONDET:
-        return _dot_seq.asNondeterministic()(a, b)
     return _dot_seq(a, b)

@@ -25,9 +25,12 @@ Divergence note (documented): the reference packs greedily (a record
 starts a new message when adding it would cross the limit), which is
 a running-sum-with-reset — inherently sequential.  We bucket by
 ``floor(exclusive_running_size / max_size)``, which crosses a
-boundary at the same multiples but without per-message reset; both
-respect the byte bound for any record ≤ max_size and produce
-deterministic, replayable message ids.
+boundary at the same multiples but without per-message reset.  A
+message starts while its running total is under the bound and takes
+whole records, so it can overshoot ``max_size`` by up to one record
+plus its newline separators; callers with a hard transport limit set
+``max_size`` that much below it.  Message ids are deterministic and
+replayable.
 """
 
 from __future__ import annotations
@@ -56,6 +59,10 @@ def assign_messages(
     (``firstSeq-lastSeq`` of the message — the reference's
     deterministic id without the optional wallclock suffix,
     AbstractJSONConverter.java:170-176).
+
+    The byte bound is not strict: a message can overshoot
+    ``max_message_size`` by up to one record plus its newline
+    separators (see the module docstring).
     """
     w = Window.partitionBy(shard_col).orderBy(seq_col)
     sized = df.withColumn("__size", size_col)

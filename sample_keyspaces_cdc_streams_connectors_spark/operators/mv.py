@@ -10,15 +10,26 @@ last-writer-wins per primary key, the final table state is fully
 determined by the *latest* event per key.
 
 Spark-first: instead of replaying row-at-a-time, reconstruct the
-final state declaratively — ``groupBy(pk).agg(max_by(struct(op,
-newImage, seq), seq))`` picks each key's last event.  Unlike the
-equivalent ``row_number() OVER (... ORDER BY seq DESC) = 1`` window,
-``max_by`` is a combinable aggregate: every map task reduces its
-local events to one candidate per key BEFORE the exchange, so a hot
-key that dominates the log shrinks to ~n_tasks rows in flight
-instead of funnelling every event through a single sorting task.
-At 100 TB this is a single hash-partition-by-pk exchange whose
-volume is bounded by distinct keys, not events.
+final state declaratively, in two steps shared by the batch rebuild
+(:func:`mv_apply`) and the incremental view sink
+(``streaming.sinks.materialized_view_sink``):
+
+* :func:`mv_rows` turns each upsert/delete event into the stored-row
+  form ``pk…, fields…, __seq, __deleted`` (fields are taken out of
+  the image here, before any exchange);
+* :func:`last_writer_wins` keeps each key's highest-``__seq`` row with
+  ``groupBy(pk).agg(max_by(struct(...), __seq))``.  Unlike the
+  equivalent ``row_number() OVER (... ORDER BY seq DESC) = 1`` window,
+  ``max_by`` is a combinable aggregate: every map task reduces its
+  local rows to one candidate per key BEFORE the exchange, so a hot
+  key that dominates the log shrinks to ~n_tasks rows in flight
+  instead of funnelling every event through a single sorting task.
+  At 100 TB this is a single hash-partition-by-pk exchange whose
+  volume is bounded by distinct keys, not events.
+
+Deletes win as tombstone rows (``__deleted``); :func:`mv_apply` drops
+them, the view sink stores them so a stale replay cannot resurrect a
+deleted key.
 """
 
 from __future__ import annotations
@@ -33,12 +44,64 @@ from pyspark.sql import functions as F
 UPSERT_OPS = ("INSERT", "UPDATE", "REPLICATED_INSERT", "REPLICATED_UPDATE")
 DELETE_OPS = ("DELETE", "REPLICATED_DELETE", "TTL")
 
-#: Narrow the image struct crossing the max_by exchange only when the
-#: requested fields drop at least this fraction of the image's fields
-#: (r15): a rebuild that keeps nearly every field pays per-row struct
-#: construction for almost no byte savings.  0.0 = always narrow (the
-#: r14 behavior); 1.0 = never.
-_NARROW_MIN_DROP = 0.5
+
+def mv_rows(
+    env: DataFrame,
+    pk: Sequence[str],
+    fields: Sequence[str],
+    seq_col: str = "metadata.stream_sequence_number",
+) -> DataFrame:
+    """Classified CDC envelopes → stored-row form
+    ``pk…, fields…, __seq, __deleted``, one row per upsert or delete
+    event.
+
+    The key binds from ``newImage`` on upserts and from ``oldImage`` on
+    deletes (the reference's dispatch); ``fields`` come from
+    ``newImage`` (NULL on a delete).  Events that are neither upsert-
+    nor delete-class (UNKNOWN) are ignored, mirroring the reference's
+    dispatch which only handles the listed ops
+    (KeyspacesViewTargetMapper.java:113-133).
+    """
+    op = F.col("metadata.stream_operation_type")
+    key_source = F.when(op.isin(*UPSERT_OPS), F.col("newImage")).otherwise(
+        F.col("oldImage")
+    )
+    return (
+        env.filter(op.isin(*UPSERT_OPS, *DELETE_OPS))
+        .select(
+            *[key_source.getField(k).alias(k) for k in pk],
+            *[F.col("newImage").getField(f).alias(f) for f in fields],
+            F.col(seq_col).alias("__seq"),
+            op.isin(*DELETE_OPS).alias("__deleted"),
+        )
+        .filter(
+            # a delete with no old image (or upsert with no new) can't
+            # bind its key — the reference would NPE per record; we
+            # drop.  Every component of a composite key must bind
+            # (conjunction, not coalesce: isNotNull never returns NULL,
+            # so a coalesce would reduce to the first component's check).
+            functools.reduce(
+                operator.and_, [F.col(k).isNotNull() for k in pk]
+            )
+        )
+    )
+
+
+def last_writer_wins(rows: DataFrame, pk: Sequence[str]) -> DataFrame:
+    """Each ``pk``'s highest-``__seq`` row of ``rows``, columns in
+    ``rows``' order — the combinable ``max_by`` pick (partial
+    aggregate before the one exchange by ``pk``)."""
+    values = [c for c in rows.columns if c not in pk]
+    return (
+        rows.groupBy(*pk)
+        .agg(F.max_by(F.struct(*values), F.col("__seq")).alias("__last"))
+        .select(
+            *[
+                F.col(c) if c in pk else F.col("__last").getField(c).alias(c)
+                for c in rows.columns
+            ]
+        )
+    )
 
 
 def mv_apply(
@@ -46,103 +109,9 @@ def mv_apply(
     pk: Sequence[str],
     fields: Sequence[str],
     seq_col: str = "metadata.stream_sequence_number",
-    keep_seq: bool = False,
-    keep_deletes: bool = False,
 ) -> DataFrame:
-    """Reconstruct final MV state from a classified CDC envelope log.
-
-    ``pk``: primary-key field names (present in both images — the
-    reference binds them from newImage on upsert and oldImage on
-    delete).  ``fields``: the ``fields-to-include`` value columns
-    emitted for surviving rows.  Events that are neither upsert- nor
-    delete-class (UNKNOWN) are ignored, mirroring the reference's
-    dispatch which only handles the listed ops
-    (KeyspacesViewTargetMapper.java:113-133).
-
-    ``keep_seq`` adds the winning ``__seq``; ``keep_deletes`` keeps
-    delete winners as tombstone rows flagged ``__deleted`` (needed by
-    the incremental streaming MV sink so replays cannot resurrect
-    deleted keys).
-    """
-    op = F.col("metadata.stream_operation_type")
-    relevant = env.filter(op.isin(*UPSERT_OPS, *DELETE_OPS))
-
-    # The key lives in newImage for upserts, oldImage for deletes.
-    key_source = F.when(op.isin(*UPSERT_OPS), F.col("newImage")).otherwise(
-        F.col("oldImage")
-    )
-    # r14: carry ONLY the requested output fields through the
-    # aggregation, not the whole newImage struct (guide §2.3 —
-    # project before the exchange).  max_by's struct buffer forces a
-    # SortAggregate, so every dropped byte is saved in BOTH sorts and
-    # the exchange, and at scale the exchange volume drops by the
-    # unreferenced-image share.  A NULL newImage (delete winner)
-    # yields a struct of NULL fields — the output reads fields
-    # individually, so results are identical.
-    # r15 (VERDICT r14 #2): the rebuild is CONDITIONAL — when the
-    # requested fields are most of the image, the per-row struct
-    # rebuild costs more than the exchange saves (the driver measured
-    # the unconditional rebuild slower at 32c AND 8c on a 3-of-4-field
-    # request), so the whole newImage passes through unchanged unless
-    # the projection drops at least _NARROW_MIN_DROP of its fields.
-    try:
-        n_image_fields = len(env.schema["newImage"].dataType.fields)
-    except Exception:
-        n_image_fields = None
-    narrow = n_image_fields is None or (
-        len(fields) <= (1.0 - _NARROW_MIN_DROP) * n_image_fields
-    )
-    img_src = (
-        F.struct(*[F.col("newImage").getField(f).alias(f) for f in fields])
-        if narrow
-        else F.col("newImage")
-    )
-    keyed = relevant.select(
-        *[key_source.getField(k).alias(f"__pk_{k}") for k in pk],
-        op.alias("__op"),
-        F.col(seq_col).alias("__seq"),
-        img_src.alias("__img"),
-    ).filter(
-        # a delete with no old image (or upsert with no new) can't bind
-        # its key — the reference would NPE per record; we drop.  Every
-        # component of a composite key must bind (conjunction, not
-        # coalesce: isNotNull never returns NULL, so a coalesce would
-        # reduce to just the first component's check).
-        functools.reduce(
-            operator.and_,
-            [F.col(f"__pk_{k}").isNotNull() for k in pk],
-        )
-    )
-
-    # Combinable last-writer pick: max_by gets a map-side partial
-    # aggregate (partial HashAggregate before the exchange), which a
-    # row_number window cannot — sequence numbers are a total order
-    # per key so the winner is identical.
-    last = (
-        keyed.groupBy(*[f"__pk_{k}" for k in pk])
-        .agg(
-            F.max_by(
-                F.struct("__op", "__img", "__seq"), F.col("__seq")
-            ).alias("__last")
-        )
-        .select(
-            *[f"__pk_{k}" for k in pk],
-            F.col("__last.__op").alias("__op"),
-            F.col("__last.__img").alias("__img"),
-            F.col("__last.__seq").alias("__seq"),
-        )
-    )
-    extra = [F.col("__seq").alias("__seq")] if keep_seq or keep_deletes else []
-    if keep_deletes:
-        return last.select(
-            *[F.col(f"__pk_{k}").alias(k) for k in pk],
-            *[F.col("__img").getField(f).alias(f) for f in fields],
-            *extra,
-            F.col("__op").isin(*DELETE_OPS).alias("__deleted"),
-        )
-    survivors = last.filter(F.col("__op").isin(*UPSERT_OPS))
-    return survivors.select(
-        *[F.col(f"__pk_{k}").alias(k) for k in pk],
-        *[F.col("__img").getField(f).alias(f) for f in fields],
-        *extra,
-    )
+    """Reconstruct final MV state (``pk…, fields…``) from a classified
+    CDC envelope log: :func:`last_writer_wins` over :func:`mv_rows`,
+    minus the keys whose last event is a delete."""
+    latest = last_writer_wins(mv_rows(env, pk, fields, seq_col), pk)
+    return latest.filter(~F.col("__deleted")).select(*pk, *fields)

@@ -17,7 +17,6 @@ from sample_keyspaces_cdc_streams_connectors_spark.streaming.sinks import (
     memory_rows_sink,
     object_store_sink,
     queue_sink,
-    queue_sink_local,
 )
 
 __all__ = [
@@ -37,6 +36,5 @@ __all__ = [
     "memory_rows_sink",
     "object_store_sink",
     "queue_sink",
-    "queue_sink_local",
     "streaming_near_dedup",
 ]

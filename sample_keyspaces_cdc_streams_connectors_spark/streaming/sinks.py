@@ -6,6 +6,12 @@ behind injectable transports so tests run with local fakes (the
 reference's Mockito seam, SQSTargetMapperTest.java:79-96, moved to
 constructor injection).
 
+Each connector has one delivery path: :func:`queue_sink` sends from
+the executors and classifies failures per partition (Partial vs
+AllItems, as the reference does); :func:`materialized_view_sink`
+merges each batch into the stored view with the one last-writer-wins
+pick in :mod:`~sample_keyspaces_cdc_streams_connectors_spark.operators.mv`.
+
 Delivery contract: a sink exception fails the micro-batch → the
 checkpoint does not advance → redelivery (at-least-once), and file
 names derived from sequence ranges make redelivery idempotent —
@@ -15,6 +21,7 @@ exactly the reference's `firstSeq-lastSeq` object naming
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 from collections.abc import Callable, Sequence
@@ -176,32 +183,6 @@ def local_dir_transport(out_dir: str) -> QueueTransport:
     return QueueTransport(send_batch=send)
 
 
-def _bounded_messages(
-    batch_df: DataFrame,
-    shard_col: str,
-    seq_col: str,
-    max_message_size: int,
-    max_records: int,
-) -> DataFrame:
-    """Shared message assembly: serialize rows to JSON, size/count-
-    bound into messages (distributed window over shard), concat
-    bodies.  Returns (shard, message_idx, message_id, body)."""
-    payload = batch_df.withColumn(
-        "__json", F.to_json(F.struct(*batch_df.columns))
-    )
-    sized = assign_messages(
-        payload,
-        shard_col=shard_col,
-        seq_col=seq_col,
-        size_col=F.length("__json").cast("bigint"),
-        max_message_size=max_message_size,
-        max_records=max_records,
-    )
-    return sized.groupBy(shard_col, "message_idx", "message_id").agg(
-        F.concat_ws("\n", F.collect_list("__json")).alias("body")
-    )
-
-
 def queue_sink(
     transport_factory: Callable[[], QueueTransport],
     shard_col: str = "stream_keyspace_name",
@@ -212,31 +193,35 @@ def queue_sink(
     registry=None,
     metrics_name: str = "queue",
 ) -> Callable[[DataFrame, int], None]:
-    """SQS-sink analog (SQSTargetMapper.java:76-155) — the DEFAULT,
-    executor-side path: message bodies never visit the driver.  Each
-    partition opens its own transport (the per-executor
+    """SQS-sink analog (SQSTargetMapper.java:76-155), executor-side:
+    message bodies never visit the driver.  Rows serialize to JSON and
+    pack into messages of about ``max_message_size`` bytes (and at
+    most ``max_records`` records when positive); a message can
+    overshoot the byte bound by up to one record plus its newline
+    separators
+    (:func:`~sample_keyspaces_cdc_streams_connectors_spark.operators.batching.assign_messages`).
+    Each partition opens its own transport (the per-executor
     client-singleton pattern, S3VectorTargetMapper.java:183-190) and
     sends its messages in batches of 10 (SQSTargetMapper.java:90),
     each entry stamped with ``delay_seconds``
     (SQSTargetMapper.java:36,60 → SQSJsonConverter.java:22).
 
     ``transport_factory`` must be picklable and is invoked once per
-    partition on the executor.  A send failure raises in the task →
-    Spark retries the task → if retries exhaust, the micro-batch fails
-    and the checkpoint does not advance (at-least-once, same contract
-    as the reference's thrown Partial/AllItemsFailureException).
-
-    For driver-side failure *classification* (Partial vs AllItems) use
-    :func:`queue_sink_local` — a test/low-volume helper whose
-    funnel-through-the-driver shape does not scale.
+    partition on the executor.  A partition sends ALL of its batches,
+    counting failed entries, then classifies like the reference
+    (SQSTargetMapper.java:113-155): every entry failed →
+    :class:`AllItemsFailureError`, some failed →
+    :class:`PartialFailureError`.  The error fails the task → Spark
+    retries it → if retries exhaust, the micro-batch fails and the
+    checkpoint does not advance (at-least-once).
 
     Pass a ``registry``
     (:class:`~sample_keyspaces_cdc_streams_connectors_spark.metrics.MetricsRegistry`)
-    to count delivery: because the send runs through an RDD
+    to count delivered messages: because the send runs through an RDD
     ``foreachPartition`` (invisible to SQL observed metrics), counts
     are gathered with Spark ACCUMULATORS — each task adds its
-    partition's messages/records/bytes, the driver folds the totals
-    into ``sink.<metrics_name>.{messages_out,records_out,bytes_out}``
+    partition's delivered messages/records/bytes, the driver folds the
+    totals into ``sink.<metrics_name>.{messages_out,records_out,bytes_out}``
     after the action.  Note Spark re-runs of a failed task can
     double-count accumulator updates — counters here are delivery
     telemetry (like the reference's CloudWatch counts), not an exact
@@ -249,8 +234,18 @@ def queue_sink(
     acc: dict = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        messages = _bounded_messages(
-            batch_df, shard_col, seq_col, max_message_size, max_records
+        payload = batch_df.withColumn(
+            "__json", F.to_json(F.struct(*batch_df.columns))
+        )
+        messages = assign_messages(
+            payload,
+            shard_col=shard_col,
+            seq_col=seq_col,
+            size_col=F.length("__json").cast("bigint"),
+            max_message_size=max_message_size,
+            max_records=max_records,
+        ).groupBy(shard_col, "message_idx", "message_id").agg(
+            F.concat_ws("\n", F.collect_list("__json")).alias("body")
         )
         acc_msgs = acc_records = acc_bytes = None
         base = (0, 0, 0)
@@ -266,34 +261,24 @@ def queue_sink(
             base = (acc_msgs.value, acc_records.value, acc_bytes.value)
 
         def send_partition(rows) -> None:
+            entries = (QueueMessage(row.body, delay_seconds) for row in rows)
             transport = None
-            pending: list[QueueMessage] = []
-
-            def flush() -> None:
-                if pending:
-                    failed = transport.send_batch(list(pending))
-                    if failed:
-                        raise RuntimeError(
-                            f"{len(failed)}/{len(pending)} messages failed"
-                        )
-                    if acc_msgs is not None:
-                        acc_msgs.add(len(pending))
-                        acc_records.add(
-                            sum(m.body.count("\n") + 1 for m in pending)
-                        )
-                        acc_bytes.add(
-                            sum(len(m.body.encode()) for m in pending)
-                        )
-                    pending.clear()
-
-            for row in rows:
+            total = failed = 0
+            while chunk := list(itertools.islice(entries, SQS_BATCH_SIZE)):
                 if transport is None:
                     transport = transport_factory()
-                pending.append(QueueMessage(row.body, delay_seconds))
-                if len(pending) == SQS_BATCH_SIZE:
-                    flush()
-            if transport is not None:
-                flush()
+                bad = set(transport.send_batch(chunk))
+                total += len(chunk)
+                failed += len(bad)
+                if acc_msgs is not None:
+                    ok = [m for i, m in enumerate(chunk) if i not in bad]
+                    acc_msgs.add(len(ok))
+                    acc_records.add(sum(m.body.count("\n") + 1 for m in ok))
+                    acc_bytes.add(sum(len(m.body.encode()) for m in ok))
+            if failed and failed == total:
+                raise AllItemsFailureError(f"all {total} messages failed")
+            if failed:
+                raise PartialFailureError(failed, total - failed)
 
         try:
             messages.foreachPartition(send_partition)
@@ -314,49 +299,6 @@ def queue_sink(
             registry.inc(
                 f"sink.{metrics_name}.bytes_out", acc_bytes.value - base[2]
             )
-
-    return sink
-
-
-#: backward-compatible alias — the distributed path IS queue_sink now
-queue_sink_distributed = queue_sink
-
-
-def queue_sink_local(
-    transport: QueueTransport,
-    shard_col: str = "stream_keyspace_name",
-    seq_col: str = "stream_sequence_number",
-    max_message_size: int = DEFAULT_MAX_MESSAGE_SIZE,
-    max_records: int = -1,
-    delay_seconds: int = 0,
-) -> Callable[[DataFrame, int], None]:
-    """Driver-side queue sink variant: same message assembly as
-    :func:`queue_sink`, but bodies stream to the driver
-    (toLocalIterator) and one shared transport sends them, raising
-    PartialFailureError / AllItemsFailureError exactly like the
-    reference's classification (SQSTargetMapper.java:113-155).
-
-    TEST/LOW-VOLUME HELPER: the driver funnel is the non-scaling shape
-    — use the default :func:`queue_sink` in any real pipeline.
-    """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        messages = _bounded_messages(
-            batch_df, shard_col, seq_col, max_message_size, max_records
-        ).orderBy(shard_col, "message_idx")
-        bodies = [r.body for r in messages.toLocalIterator()]
-        failed = total = 0
-        for i in range(0, len(bodies), SQS_BATCH_SIZE):
-            chunk = [
-                QueueMessage(b, delay_seconds)
-                for b in bodies[i : i + SQS_BATCH_SIZE]
-            ]
-            total += len(chunk)
-            failed += len(transport.send_batch(chunk))
-        if failed and failed == total:
-            raise AllItemsFailureError(f"all {total} messages failed")
-        if failed:
-            raise PartialFailureError(failed, total - failed)
 
     return sink
 
@@ -407,17 +349,22 @@ def materialized_view_sink(
 
     INCREMENTAL BY BUCKET: the stored view is hash-partitioned into
     ``n_buckets`` pk-hash buckets tracked by a JSON manifest
-    (bucket → parquet dir).  A batch rewrites ONLY the buckets its
-    keys touch: prior state for touched buckets UNION batch winners →
-    one window by pk → highest-sequence row wins.  Untouched buckets'
-    files are never opened, so per-batch I/O is O(|touched state|),
-    not O(|view|) — the property that keeps a 100 TB view from the
-    full-rewrite compaction spiral.  The manifest flips atomically
-    (os.replace) after a successful write, so a failed batch never
-    corrupts the readable view, and replaying a batch yields the same
-    winners (idempotent under at-least-once redelivery).  Deletes stay
-    as tombstones in the stored state so replays cannot resurrect
-    deleted keys; readers filter them.
+    (bucket → parquet dir).  The batch's events become stored rows
+    (:func:`~sample_keyspaces_cdc_streams_connectors_spark.operators.mv.mv_rows`);
+    a batch rewrites ONLY the buckets those rows touch, merging prior
+    state for the touched buckets with the batch rows through the same
+    combinable last-writer-wins pick the batch rebuild uses
+    (:func:`~sample_keyspaces_cdc_streams_connectors_spark.operators.mv.last_writer_wins`,
+    one exchange).  Untouched buckets' files are never opened, so
+    per-batch I/O is O(|touched state|), not O(|view|) — the property
+    that keeps a 100 TB view from the full-rewrite compaction spiral.
+    The manifest flips atomically (os.replace) after a successful
+    write, so a failed batch never corrupts the readable view;
+    replaying a batch yields the same winners, and a batch_id whose
+    version the manifest already references is skipped (idempotent
+    under at-least-once redelivery).  Deletes stay as tombstones in the
+    stored state so replays cannot resurrect deleted keys; readers
+    filter them.
 
     The version write retries under the reference's linear MV policy
     (``sleep(10ms * attempt)`` up to ``max_retries``,
@@ -425,7 +372,10 @@ def materialized_view_sink(
     increments ``retry.mv_sink`` in ``registry`` (default: the
     process metrics registry → visible on ``GET /metrics``).
     """
-    from sample_keyspaces_cdc_streams_connectors_spark.operators.mv import mv_apply
+    from sample_keyspaces_cdc_streams_connectors_spark.operators.mv import (
+        last_writer_wins,
+        mv_rows,
+    )
 
     bucket_expr = F.pmod(F.hash(*pk), F.lit(n_buckets)).cast("int")
 
@@ -433,16 +383,19 @@ def materialized_view_sink(
         spark = batch_df.sparkSession
         os.makedirs(view_dir, exist_ok=True)
         manifest = _mv_read_manifest(view_dir)
+        new_dir = os.path.join(view_dir, f"v{batch_id:06d}")
+        if any(os.path.dirname(p) == new_dir for p in manifest.values()):
+            # redelivery of a batch whose manifest flip already landed:
+            # the same batch_id carries the same rows, and rewriting
+            # would overwrite the dir the merge reads its prior from
+            return
 
-        # batch winners: (pk, fields, seq, is_delete) from the envelope
-        batch_state = mv_apply(
-            batch_df, pk=pk, fields=fields, seq_col=seq_col,
-            keep_seq=True, keep_deletes=True,
-        ).withColumn("__bucket", bucket_expr)
-
+        # stored-row form: (pk, fields, __seq, __deleted, __bucket)
+        rows = mv_rows(batch_df, pk, fields, seq_col).withColumn(
+            "__bucket", bucket_expr
+        )
         touched = sorted(
-            r["__bucket"]
-            for r in batch_state.select("__bucket").distinct().collect()
+            r["__bucket"] for r in rows.select("__bucket").distinct().collect()
         )
         if not touched:
             return
@@ -454,18 +407,8 @@ def materialized_view_sink(
             # reading only the touched buckets' dirs = physical
             # partition pruning; __bucket is stored as a data column so
             # leaf-dir reads keep it
-            merged = spark.read.parquet(*prior_paths).unionByName(batch_state)
-        else:
-            merged = batch_state
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*pk).orderBy(F.col("__seq").desc())
-        latest = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        new_dir = os.path.join(view_dir, f"v{batch_id:06d}")
+            rows = spark.read.parquet(*prior_paths).unionByName(rows)
+        latest = last_writer_wins(rows, pk)
         # __pb duplicates __bucket as a partition column: the layout is
         # one subdir per bucket, while __bucket survives as data so
         # later leaf-dir reads don't lose it.  The write runs under

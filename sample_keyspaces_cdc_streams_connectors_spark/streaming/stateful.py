@@ -89,7 +89,7 @@ def last_image_tracker(
 ) -> DataFrame:
     """Streaming last-writer-wins tracker: for each key, keep the value
     from the highest-sequence record seen so far (the stateful
-    streaming form of ``operators.mv.mv_apply``'s window).
+    streaming form of ``operators.mv.last_writer_wins``).
 
     Emits the key's current winner each micro-batch it changes in.
     """

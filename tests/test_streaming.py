@@ -5,21 +5,19 @@ the transform stack into foreachBatch sinks, with checkpointing
 from __future__ import annotations
 
 import glob
-import json
+import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from sample_keyspaces_cdc_streams_connectors_spark.streaming import (
-    AllItemsFailureError,
     CdcPipeline,
-    PartialFailureError,
     PipelineConfig,
     QueueTransport,
-    local_dir_transport,
     memory_rows_sink,
     object_store_sink,
-    queue_sink_local,
+    queue_sink,
 )
 from sample_keyspaces_cdc_streams_connectors_spark.streaming.sinks import (
     materialized_view_sink,
@@ -120,72 +118,59 @@ def test_object_store_sink_partitions(spark, env_parquet, tmp_path):
     assert len(sample.replace("%2F", "/").split("/")) == 4
 
 
-def test_queue_sink_chunks_of_ten(spark, env_parquet, tmp_path):
+def _counting_factory(out_dir: str, fail=lambda n: []):
+    """Picklable transport factory: each send writes its bodies to one
+    file named ``<entry count>-<uuid>``; ``fail(n)`` picks the failed
+    indexes of an ``n``-entry send."""
+
+    def make() -> QueueTransport:
+        os.makedirs(out_dir, exist_ok=True)
+
+        def send(batch):
+            name = f"{len(batch)}-{uuid.uuid4().hex}"
+            with open(os.path.join(out_dir, name), "w") as fh:
+                fh.write("\n".join(m.body for m in batch) + "\n")
+            return fail(len(batch))
+
+        return QueueTransport(send_batch=send)
+
+    return make
+
+
+def test_queue_sink_chunks_of_ten(spark, envelopes, tmp_path):
     """SQS sends at most 10 messages per SendMessageBatch
     (SQSTargetMapper.java:90)."""
-    calls: list[int] = []
-
-    def send(batch):
-        calls.append(len(batch))
-        return []
-
-    cfg = PipelineConfig(
-        checkpoint_dir=str(tmp_path / "ckpt5"),
-    )
-    # tiny max size -> many messages -> multiple transport calls
-    _run(
-        spark,
-        env_parquet,
-        cfg,
-        queue_sink_local(
-            QueueTransport(send_batch=send), max_message_size=2048
-        ),
-    )
-    assert calls and all(c <= 10 for c in calls)
-
-
-def test_queue_sink_stamps_delay_seconds(spark, envelopes):
-    """Every outbound entry carries the configured delay-seconds
-    (SQSTargetMapper.java:36,60 -> SQSJsonConverter.java:22)."""
     from sample_keyspaces_cdc_streams_connectors_spark.operators import shape_output
 
-    delays: list[int] = []
-
-    def send(batch):
-        delays.extend(m.delay_seconds for m in batch)
-        return []
-
-    batch = shape_output(envelopes.limit(40))
-    queue_sink_local(
-        QueueTransport(send_batch=send),
-        max_message_size=1024,
-        delay_seconds=45,
-    )(batch, 0)
-    assert delays and all(d == 45 for d in delays)
+    out = str(tmp_path / "sends")
+    # tiny max size -> ~one record per message -> many sends per partition
+    queue_sink(_counting_factory(out), max_message_size=512)(
+        shape_output(envelopes.limit(200)), 0
+    )
+    files = glob.glob(f"{out}/*")
+    sizes = [int(os.path.basename(f).split("-")[0]) for f in files]
+    assert max(sizes) == 10
+    assert sum(len(open(f).read().splitlines()) for f in files) == 200
 
 
-def test_queue_sink_failure_classification(spark, envelopes):
+def test_queue_sink_failure_classification(spark, envelopes, tmp_path):
     """Partial failures raise PartialFailureError; total failure raises
-    AllItemsFailureError (PartialFailureException.java:27-47)."""
+    AllItemsFailureError (PartialFailureException.java:27-47) — the
+    class name reaches the driver-side error."""
     from sample_keyspaces_cdc_streams_connectors_spark.operators import shape_output
 
     batch = shape_output(envelopes.limit(50))
 
-    def fail_first(batch_msgs):
-        return [0]  # first message of every chunk fails
+    # the first entry of every send fails; the others succeed
+    fail_first = _counting_factory(str(tmp_path / "p"), lambda n: [0])
+    with pytest.raises(Exception, match=r"PartialFailureError: \d+ failed"):
+        queue_sink(fail_first, max_message_size=512)(batch, 0)
 
-    with pytest.raises((PartialFailureError, AllItemsFailureError)):
-        queue_sink_local(
-            QueueTransport(send_batch=fail_first), max_message_size=512
-        )(batch, 0)
-
-    def fail_all(batch_msgs):
-        return list(range(len(batch_msgs)))
-
-    with pytest.raises(AllItemsFailureError):
-        queue_sink_local(
-            QueueTransport(send_batch=fail_all), max_message_size=512
-        )(batch, 0)
+    fail_all = _counting_factory(str(tmp_path / "a"), lambda n: list(range(n)))
+    with pytest.raises(
+        Exception, match=r"AllItemsFailureError: all \d+ messages failed"
+    ):
+        queue_sink(fail_all, max_message_size=512)(batch, 0)
 
 
 def test_watermark_windowed_stream_matches_batch(spark, sf_dir, tmp_path):
@@ -459,19 +444,6 @@ def test_streaming_drop_duplicates_within_watermark(spark, sf_dir, tmp_path):
     assert set(got) == distinct_keys  # every key surfaced
     # within one watermark span of a single file the dedup is exact
     assert len(got) == len(distinct_keys)
-
-
-def test_local_dir_transport_writes_jsonl(spark, envelopes, tmp_path):
-    from sample_keyspaces_cdc_streams_connectors_spark.operators import shape_output
-
-    out = str(tmp_path / "queue")
-    batch = shape_output(envelopes.limit(20))
-    queue_sink_local(local_dir_transport(out))(batch, 0)
-    files = glob.glob(f"{out}/batch-*.jsonl")
-    assert files
-    lines = [json.loads(line) for f in files for line in open(f)]
-    assert len(lines) == 20
-    assert all("stream_sequence_number" in rec for rec in lines)
 
 
 def test_replay_queries_leave_no_temp_views(spark, sf_dir):
