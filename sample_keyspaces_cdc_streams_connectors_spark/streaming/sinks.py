@@ -21,6 +21,7 @@ exactly the reference's `firstSeq-lastSeq` object naming
 
 from __future__ import annotations
 
+import functools
 import itertools
 import json
 import os
@@ -324,13 +325,46 @@ def _mv_read_manifest(view_dir: str) -> dict[str, str]:
         return json.load(fh)
 
 
+def _mv_version(view_dir: str, path: str) -> str:
+    """Name of the version dir (``v<batch_id>``) a manifest value lives
+    in: the value itself, or its parent for the ``v…/__pb=<bucket>``
+    leaf dirs of views written with one subdir per bucket."""
+    return os.path.relpath(path, view_dir).split(os.sep)[0]
+
+
+def _mv_read_buckets(
+    spark, manifest: dict[str, str], buckets, schema
+) -> DataFrame | None:
+    """Stored rows of ``buckets`` (None when the manifest names none).
+
+    A version dir holds every bucket its batch touched, and a later
+    batch can move some of them to a newer dir, so each manifest path
+    is read keeping only the buckets the manifest maps to it: a row is
+    read only from the dir the manifest names for its bucket.  Files
+    are sorted by ``__bucket``, so the filter also prunes row groups.
+    Reading with the stored-row ``schema`` skips footer inference."""
+    by_path: dict[str, list[int]] = {}
+    for b in buckets:
+        if str(b) in manifest:
+            by_path.setdefault(manifest[str(b)], []).append(int(b))
+    frames = [
+        spark.read.schema(schema)
+        .parquet(path)
+        .filter(F.col("__bucket").isin(wanted))
+        for path, wanted in sorted(by_path.items())
+    ]
+    return functools.reduce(DataFrame.unionByName, frames) if frames else None
+
+
 def _mv_write_version(latest: DataFrame, new_dir: str) -> None:
     """One version-directory write (module-level so tests can inject
-    transient failures around the retried unit).  ``overwrite`` makes
-    a retried half-written attempt idempotent."""
-    latest.withColumn("__pb", F.col("__bucket")).write.mode(
-        "overwrite"
-    ).partitionBy("__pb").parquet(new_dir)
+    transient failures around the retried unit): one plain parquet dir,
+    one file per write task, rows sorted by ``__bucket`` within each
+    file so row-group statistics can skip other buckets.  ``overwrite``
+    makes a retried half-written attempt idempotent."""
+    latest.sortWithinPartitions("__bucket").write.mode("overwrite").parquet(
+        new_dir
+    )
 
 
 def materialized_view_sink(
@@ -355,14 +389,20 @@ def materialized_view_sink(
     state for the touched buckets with the batch rows through the same
     combinable last-writer-wins pick the batch rebuild uses
     (:func:`~sample_keyspaces_cdc_streams_connectors_spark.operators.mv.last_writer_wins`,
-    one exchange).  Untouched buckets' files are never opened, so
-    per-batch I/O is O(|touched state|), not O(|view|) — the property
-    that keeps a 100 TB view from the full-rewrite compaction spiral.
-    The manifest flips atomically (os.replace) after a successful
-    write, so a failed batch never corrupts the readable view;
-    replaying a batch yields the same winners, and a batch_id whose
-    version the manifest already references is skipped (idempotent
-    under at-least-once redelivery).  Deletes stay as tombstones in the
+    one exchange).  The merged rows land in one new version dir
+    ``v<batch_id>`` — a few files, one per write task, rows sorted by
+    ``__bucket`` — and every touched bucket's manifest entry names that
+    dir.  Reads keep, from each dir, only the buckets the manifest maps
+    to it, so superseded rows left in older dirs are never read.
+    Untouched buckets' files are never rewritten, so per-batch I/O is
+    O(|touched state|), not O(|view|) — the property that keeps a
+    100 TB view from the full-rewrite compaction spiral.  The manifest
+    flips atomically (os.replace) after a successful write, so a failed
+    batch never corrupts the readable view; replaying a batch yields
+    the same winners, and a batch_id whose version dir the manifest
+    already references is skipped (idempotent under at-least-once
+    redelivery).  A version dir is pruned once neither the current nor
+    the previous manifest names it.  Deletes stay as tombstones in the
     stored state so replays cannot resurrect deleted keys; readers
     filter them.
 
@@ -383,8 +423,9 @@ def materialized_view_sink(
         spark = batch_df.sparkSession
         os.makedirs(view_dir, exist_ok=True)
         manifest = _mv_read_manifest(view_dir)
-        new_dir = os.path.join(view_dir, f"v{batch_id:06d}")
-        if any(os.path.dirname(p) == new_dir for p in manifest.values()):
+        version = f"v{batch_id:06d}"
+        new_dir = os.path.join(view_dir, version)
+        if any(_mv_version(view_dir, p) == version for p in manifest.values()):
             # redelivery of a batch whose manifest flip already landed:
             # the same batch_id carries the same rows, and rewriting
             # would overwrite the dir the merge reads its prior from
@@ -400,19 +441,11 @@ def materialized_view_sink(
         if not touched:
             return
 
-        prior_paths = [
-            manifest[str(b)] for b in touched if str(b) in manifest
-        ]
-        if prior_paths:
-            # reading only the touched buckets' dirs = physical
-            # partition pruning; __bucket is stored as a data column so
-            # leaf-dir reads keep it
-            rows = spark.read.parquet(*prior_paths).unionByName(rows)
+        prior = _mv_read_buckets(spark, manifest, touched, rows.schema)
+        if prior is not None:
+            rows = prior.unionByName(rows)
         latest = last_writer_wins(rows, pk)
-        # __pb duplicates __bucket as a partition column: the layout is
-        # one subdir per bucket, while __bucket survives as data so
-        # later leaf-dir reads don't lose it.  The write runs under
-        # the reference's linear MV retry policy
+        # the write runs under the reference's linear MV retry policy
         # (KeyspacesViewTargetMapper.java:136-149); retries count into
         # the metrics registry as ``retry.mv_sink`` by default
         from sample_keyspaces_cdc_streams_connectors_spark.streaming.retry import with_linear_retry
@@ -426,7 +459,7 @@ def materialized_view_sink(
 
         new_manifest = dict(manifest)
         for b in touched:
-            new_manifest[str(b)] = os.path.join(new_dir, f"__pb={b}")
+            new_manifest[str(b)] = new_dir
         tmp = os.path.join(view_dir, MV_MANIFEST + ".tmp")
         with open(tmp, "w", encoding="utf-8") as fh:
             json.dump(new_manifest, fh, sort_keys=True)
@@ -437,7 +470,7 @@ def materialized_view_sink(
         import shutil
 
         referenced = {
-            os.path.dirname(p)
+            _mv_version(view_dir, p)
             for p in (*new_manifest.values(), *manifest.values())
         }
         for entry in os.listdir(view_dir):
@@ -445,7 +478,7 @@ def materialized_view_sink(
             if (
                 entry.startswith("v")
                 and os.path.isdir(full)
-                and full not in referenced
+                and entry not in referenced
             ):
                 shutil.rmtree(full, ignore_errors=True)
 
@@ -456,7 +489,9 @@ def read_materialized_view(spark, view_dir: str):
     """Current view contents (tombstones filtered)."""
     manifest = _mv_read_manifest(view_dir)
     paths = sorted(set(manifest.values()))
-    df = spark.read.parquet(*paths)
+    # one footer gives the stored-row schema for every path
+    schema = spark.read.parquet(*paths[-1:]).schema
+    df = _mv_read_buckets(spark, manifest, manifest.keys(), schema)
     return df.filter(~F.col("__deleted")).drop(
         "__seq", "__deleted", "__bucket"
     )

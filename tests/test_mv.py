@@ -277,3 +277,130 @@ def test_view_sink_merge_is_one_combinable_exchange(spark, tmp_path, monkeypatch
         assert "Window" not in plan
         assert "partial_max_by" in plan
         assert plan.count("Exchange") == 1
+
+
+# --- view layout: one version dir per batch, shared by its buckets -------
+
+
+def _buckets(spark, keys, n_buckets):
+    """key → view bucket, computed as the sink does."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(k,) for k in keys], IMG[:1])
+    return {
+        r.k: r.b
+        for r in df.select(
+            "k", F.pmod(F.hash("k"), F.lit(n_buckets)).alias("b")
+        ).collect()
+    }
+
+
+def _inserts(keys, seq0, value):
+    return [(seq0 + i, "INSERT", (k, value), None) for i, k in enumerate(keys)]
+
+
+def test_view_sink_superseded_buckets_never_read(spark, tmp_path):
+    """Buckets a later batch moved to a newer version dir still have
+    rows in the older, shared dir; reads take each bucket only from the
+    dir the manifest names for it, and that older dir is kept while an
+    untouched bucket names it."""
+    import os
+
+    view_dir = str(tmp_path / "view")
+    sink = sinks.materialized_view_sink(view_dir, pk=["k"], fields=["v"], n_buckets=16)
+    keys = list(range(1, 161))
+    bucket = _buckets(spark, keys, 16)
+    a = _inserts(keys, 1, "a")
+    sink(_env(spark, a), 0)
+    m_a = sinks._mv_read_manifest(view_dir)
+    assert len(m_a) == 16
+    (dir_a,) = set(m_a.values())  # every bucket names one version dir
+
+    k1, k2 = 1, 2
+    b = [(100, "UPDATE", (k1, "b"), (k1, "a")), (101, "DELETE", None, (k2, "a"))]
+    sink(_env(spark, b), 1)
+    got = sinks.read_materialized_view(spark, view_dir).collect()
+    assert sorted(r.k for r in got) == [k for k in keys if k != k2]
+    assert {r.k: r.v for r in got}[k1] == "b"
+
+    m_b = sinks._mv_read_manifest(view_dir)
+    still_a = next(k for k in keys if m_b[str(bucket[k])] == dir_a)
+    c = [(200, "UPDATE", (k1, "c"), (k1, "b")), (201, "UPDATE", (still_a, "c"), (still_a, "a"))]
+    sink(_env(spark, c), 2)
+    expect = mv_apply(_env(spark, a + b + c), pk=["k"], fields=["v"])
+    assert _view(spark, view_dir) == {r.k: r.v for r in expect.collect()}
+    m_c = sinks._mv_read_manifest(view_dir)
+    assert dir_a in m_c.values() and os.path.isdir(dir_a)
+
+
+def _write_parent_format_view(spark, view_dir, events, n_buckets):
+    """A view as the one-subdir-per-bucket layout stored it:
+    ``partitionBy("__pb")`` leaf dirs, manifest values ``v…/__pb=<b>``."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from sample_keyspaces_cdc_streams_connectors_spark.operators.mv import (
+        last_writer_wins,
+        mv_rows,
+    )
+
+    rows = mv_rows(_env(spark, events), ["k"], ["v"]).withColumn(
+        "__bucket", F.pmod(F.hash("k"), F.lit(n_buckets)).cast("int")
+    )
+    v0 = os.path.join(view_dir, "v000000")
+    last_writer_wins(rows, ["k"]).withColumn("__pb", F.col("__bucket")).write.partitionBy(
+        "__pb"
+    ).parquet(v0)
+    touched = {r["__bucket"] for r in rows.select("__bucket").distinct().collect()}
+    with open(os.path.join(view_dir, sinks.MV_MANIFEST), "w", encoding="utf-8") as fh:
+        json.dump({str(b): os.path.join(v0, f"__pb={b}") for b in touched}, fh)
+
+
+def test_view_sink_reads_and_merges_parent_format_view(spark, tmp_path):
+    """A view stored as one subdir per bucket reads as before and
+    merges into the one-dir-per-version layout."""
+    view_dir = str(tmp_path / "view")
+    keys = list(range(1, 33))
+    first = _inserts(keys, 1, "a") + [(50, "DELETE", None, (3, "a"))]
+    _write_parent_format_view(spark, view_dir, first, 4)
+    m0 = sinks._mv_read_manifest(view_dir)
+    assert len(m0) == 4 and all("__pb=" in p for p in m0.values())
+    expect = mv_apply(_env(spark, first), pk=["k"], fields=["v"])
+    assert _view(spark, view_dir) == {r.k: r.v for r in expect.collect()}
+
+    sink = _sink(view_dir)
+    second = [(60, "UPDATE", (1, "b"), (1, "a")), (61, "DELETE", None, (2, "a"))]
+    sink(_env(spark, second), 1)
+    expect = mv_apply(_env(spark, first + second), pk=["k"], fields=["v"])
+    assert _view(spark, view_dir) == {r.k: r.v for r in expect.collect()}
+
+    third = _inserts(keys, 100, "c")
+    sink(_env(spark, third), 2)
+    assert not any("__pb=" in p for p in sinks._mv_read_manifest(view_dir).values())
+    assert _view(spark, view_dir) == {k: "c" for k in keys}
+
+
+def test_view_sink_version_layout(spark, tmp_path):
+    """One sink call writes one flat version dir: no subdirectories, at
+    most one parquet file per shuffle partition, rows sorted by bucket
+    within each file."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    view_dir = str(tmp_path / "view")
+    sink = sinks.materialized_view_sink(view_dir, pk=["k"], fields=["v"], n_buckets=16)
+    sink(_env(spark, _inserts(range(500), 1, "a")).repartition(3), 0)
+    (new_dir,) = set(sinks._mv_read_manifest(view_dir).values())
+    entries = os.listdir(new_dir)
+    assert not [e for e in entries if os.path.isdir(os.path.join(new_dir, e))]
+    files = [e for e in entries if e.endswith(".parquet")]
+    assert 1 <= len(files) <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = 0
+    for f in files:
+        buckets = pq.read_table(os.path.join(new_dir, f), columns=["__bucket"]).column(0).to_pylist()
+        assert buckets == sorted(buckets)
+        n += len(buckets)
+    assert n == 500
