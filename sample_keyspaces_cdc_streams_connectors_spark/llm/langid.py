@@ -296,7 +296,10 @@ def train_langid(
             # partitioning, so training is reproducible — plain
             # double sums drift in the last bits with shuffle order
             # and the drift compounds over iterations
-            rows = (
+            # toPandas, not collect: with Arrow on, the (≤ n_buckets)
+            # gradient rows arrive as columns instead of one Python
+            # Row each — the Row path was ~30% of an iteration
+            pdf = (
                 agg.groupBy("bucket")
                 .agg(
                     F.array(
@@ -313,17 +316,18 @@ def train_langid(
                     .cast("double")
                     .alias("l"),
                 )
-                .collect()
+                .toPandas()
             )
+            bucket = pdf["bucket"].to_numpy(dtype=np.int64)
+            g = np.array(pdf["g"].tolist(), dtype=np.float64).reshape(-1, c)
             grad = np.zeros((n_buckets, c), dtype=np.float64)
             gb = np.zeros(c, dtype=np.float64)
             loss = 0.0
-            for row in rows:
-                if row["bucket"] == -1:
-                    gb = np.asarray(row["g"], dtype=np.float64)
-                    loss = float(row["l"]) / n
-                else:
-                    grad[row["bucket"]] = row["g"]
+            sentinel = bucket == -1
+            if sentinel.any():
+                gb = g[sentinel][0]
+                loss = float(pdf["l"].to_numpy()[sentinel][0]) / n
+            grad[bucket[~sentinel]] = g[~sentinel]
             w = w - lr * (grad / n + l2 * w)
             b = b - lr * gb / n
             if prev_loss - loss < tol * max(prev_loss, 1e-12):

@@ -334,3 +334,23 @@ def test_fit_rejects_unknown_seed_mode(spark):
     df = _clustered(spark)
     with _pytest.raises(ValueError, match="seed_mode"):
         kmeans_fit(df, k=4, seed_mode="nope")
+
+
+def test_codebook_literal_is_bit_exact(spark):
+    """The codebook literal parsed from one SQL string holds the
+    identical doubles, signed zeros, subnormals and non-finite values
+    included, so distances match the lit-by-lit form bit for bit."""
+    import math
+    import struct
+
+    from sample_keyspaces_cdc_streams_connectors_spark.llm.kmeans import _codebook_lit
+
+    book = [
+        [0.1, -0.0, 0.0, 1e-05, 1.2345e-300, 5e-324],
+        [1e300, -1.7976931348623157e308, 1.2345678901234568e17, -3.3, 7.0, 2.5e-08],
+        [float("nan"), float("inf"), float("-inf"), 1.0, -1.0, 0.5],
+    ]
+    (got,) = spark.range(1).select(_codebook_lit(book).alias("m")).first()
+    bits = lambda m: [[struct.pack(">d", x) for x in r] for r in m]  # noqa: E731
+    assert bits(got) == bits(book)
+    assert math.copysign(1.0, got[0][1]) == -1.0
