@@ -15,25 +15,26 @@ Reference behaviors:
   path ``YYYY/MM/DD/HH/mm/ss`` truncated at the configured
   granularity; object key = ``prefix/partition/firstSeq-lastSeq-ts``.
 
-Spark-first: chunk assignment is a *window computation*, not a
-driver loop — per shard (partition key), order by sequence number,
-running byte total / row number, bucket index by integer division.
-This is one shuffle per micro-batch and scales linearly; the actual
-file split is then ``partitionBy`` + ``maxRecordsPerFile`` on write.
+The queue sink packs greedily, as the reference does
+(:func:`pack_greedy`): it sorts each partition by (shard, sequence
+number) and packs it in the same task, with no exchange and exact
+bounds.  Message ids and bodies are deterministic for a given input
+partitioning.
 
-Divergence note (documented): the reference packs greedily (a record
-starts a new message when adding it would cross the limit), which is
-a running-sum-with-reset — inherently sequential.  We bucket by
-``floor(exclusive_running_size / max_size)``, which crosses a
-boundary at the same multiples but without per-message reset.  A
-message starts while its running total is under the bound and takes
-whole records, so it can overshoot ``max_size`` by up to one record
-plus its newline separators; callers with a hard transport limit set
-``max_size`` that much below it.  Message ids are deterministic and
-replayable.
+Divergence note (documented): :func:`assign_messages`, the window form
+kept for the Spark-side callers that need a message index column
+(sink-shape queries, document chunking, sequence packing, the Avro
+path), buckets by ``floor(exclusive_running_size / max_size)`` — a
+running sum without per-message reset, parallel per shard key.  It
+crosses a boundary at the same multiples as greedy packing, but a
+message can overshoot ``max_size`` by up to one record plus its
+newline separators.  Its ids are deterministic and replayable too.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterable, Iterator
+from typing import Any
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -60,7 +61,9 @@ def assign_messages(
     deterministic id without the optional wallclock suffix,
     AbstractJSONConverter.java:170-176).
 
-    The byte bound is not strict: a message can overshoot
+    This is the window form, for callers that keep messages as a
+    column; the queue sink packs with :func:`pack_greedy` instead.  The
+    byte bound is not strict: a message can overshoot
     ``max_message_size`` by up to one record plus its newline
     separators (see the module docstring).
     """
@@ -87,6 +90,44 @@ def assign_messages(
             "-", F.min(seq_col).over(mw), F.max(seq_col).over(mw)
         ),
     )
+
+
+def pack_greedy(
+    records: Iterable[tuple[Any, Any, str]],
+    max_message_size: int = DEFAULT_MAX_MESSAGE_SIZE,
+    max_records: int = DEFAULT_MAX_RECORDS,
+) -> Iterator[tuple[str, str, int, int]]:
+    """Pack ``(shard, seq, body)`` records, sorted by (shard, seq), into
+    messages greedily (AbstractJSONConverter.java:108-177).
+
+    Yields ``(message_id, body, n_records, n_bytes)``: the id is
+    ``firstSeq-lastSeq``, the body joins the records with ``\\n`` and
+    ``n_bytes`` is its UTF-8 length.  A record starts a new message
+    when the shard changes, when ``max_records`` (if positive) records
+    are already in the message, or when adding it and its separator
+    would take the body past ``max_message_size`` bytes; a record
+    larger than the bound goes alone.
+    """
+    parts: list[str] = []
+    shard = first = last = None
+    size = 0
+    for rec_shard, seq, body in records:
+        n = len(body.encode("utf-8"))
+        if parts and (
+            rec_shard != shard
+            or size + 1 + n > max_message_size
+            or 0 < max_records <= len(parts)
+        ):
+            yield f"{first}-{last}", "\n".join(parts), len(parts), size
+            parts = []
+        if parts:
+            size += 1 + n
+        else:
+            shard, first, size = rec_shard, seq, n
+        parts.append(body)
+        last = seq
+    if parts:
+        yield f"{first}-{last}", "\n".join(parts), len(parts), size
 
 
 def time_partition(

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from sample_keyspaces_cdc_streams_connectors_spark.operators.batching import (
     DEFAULT_MAX_MESSAGE_SIZE,
-    assign_messages,
+    pack_greedy,
     time_partition,
 )
 
@@ -195,12 +195,13 @@ def queue_sink(
     metrics_name: str = "queue",
 ) -> Callable[[DataFrame, int], None]:
     """SQS-sink analog (SQSTargetMapper.java:76-155), executor-side:
-    message bodies never visit the driver.  Rows serialize to JSON and
-    pack into messages of about ``max_message_size`` bytes (and at
-    most ``max_records`` records when positive); a message can
-    overshoot the byte bound by up to one record plus its newline
-    separators
-    (:func:`~sample_keyspaces_cdc_streams_connectors_spark.operators.batching.assign_messages`).
+    message bodies never visit the driver.  Each partition is sorted by
+    (shard, sequence number), with no exchange; its rows serialize to
+    JSON and pack greedily into messages of at most
+    ``max_message_size`` UTF-8 bytes and ``max_records`` records when
+    positive, one shard per message; a single record over the byte
+    bound goes alone
+    (:func:`~sample_keyspaces_cdc_streams_connectors_spark.operators.batching.pack_greedy`).
     Each partition opens its own transport (the per-executor
     client-singleton pattern, S3VectorTargetMapper.java:183-190) and
     sends its messages in batches of 10 (SQSTargetMapper.java:90),
@@ -220,10 +221,11 @@ def queue_sink(
     (:class:`~sample_keyspaces_cdc_streams_connectors_spark.metrics.MetricsRegistry`)
     to count delivered messages: because the send runs through an RDD
     ``foreachPartition`` (invisible to SQL observed metrics), counts
-    are gathered with Spark ACCUMULATORS — each task adds its
-    partition's delivered messages/records/bytes, the driver folds the
-    totals into ``sink.<metrics_name>.{messages_out,records_out,bytes_out}``
-    after the action.  Note Spark re-runs of a failed task can
+    are gathered with Spark ACCUMULATORS — each task adds the
+    messages, records and bytes its packer counted for the delivered
+    entries, the driver folds the totals into
+    ``sink.<metrics_name>.{messages_out,records_out,bytes_out}`` after
+    the action.  Note Spark re-runs of a failed task can
     double-count accumulator updates — counters here are delivery
     telemetry (like the reference's CloudWatch counts), not an exact
     ledger.
@@ -235,19 +237,11 @@ def queue_sink(
     acc: dict = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        payload = batch_df.withColumn(
-            "__json", F.to_json(F.struct(*batch_df.columns))
-        )
-        messages = assign_messages(
-            payload,
-            shard_col=shard_col,
-            seq_col=seq_col,
-            size_col=F.length("__json").cast("bigint"),
-            max_message_size=max_message_size,
-            max_records=max_records,
-        ).groupBy(shard_col, "message_idx", "message_id").agg(
-            F.concat_ws("\n", F.collect_list("__json")).alias("body")
-        )
+        records = batch_df.select(
+            F.col(shard_col).alias("__shard"),
+            F.col(seq_col).alias("__seq"),
+            F.to_json(F.struct(*batch_df.columns)).alias("__json"),
+        ).sortWithinPartitions("__shard", "__seq")
         acc_msgs = acc_records = acc_bytes = None
         base = (0, 0, 0)
         if registry is not None:
@@ -262,27 +256,32 @@ def queue_sink(
             base = (acc_msgs.value, acc_records.value, acc_bytes.value)
 
         def send_partition(rows) -> None:
-            entries = (QueueMessage(row.body, delay_seconds) for row in rows)
+            # (message_id, body, n_records, n_bytes) per message
+            packed = pack_greedy(rows, max_message_size, max_records)
             transport = None
             total = failed = 0
-            while chunk := list(itertools.islice(entries, SQS_BATCH_SIZE)):
+            while chunk := list(itertools.islice(packed, SQS_BATCH_SIZE)):
                 if transport is None:
                     transport = transport_factory()
-                bad = set(transport.send_batch(chunk))
+                bad = set(
+                    transport.send_batch(
+                        [QueueMessage(m[1], delay_seconds) for m in chunk]
+                    )
+                )
                 total += len(chunk)
                 failed += len(bad)
                 if acc_msgs is not None:
                     ok = [m for i, m in enumerate(chunk) if i not in bad]
                     acc_msgs.add(len(ok))
-                    acc_records.add(sum(m.body.count("\n") + 1 for m in ok))
-                    acc_bytes.add(sum(len(m.body.encode()) for m in ok))
+                    acc_records.add(sum(m[2] for m in ok))
+                    acc_bytes.add(sum(m[3] for m in ok))
             if failed and failed == total:
                 raise AllItemsFailureError(f"all {total} messages failed")
             if failed:
                 raise PartialFailureError(failed, total - failed)
 
         try:
-            messages.foreachPartition(send_partition)
+            records.foreachPartition(send_partition)
         except Exception:
             if registry is not None:
                 registry.inc(f"sink.{metrics_name}.failed_batches")

@@ -5,6 +5,7 @@ the transform stack into foreachBatch sinks, with checkpointing
 from __future__ import annotations
 
 import glob
+import json
 import os
 import uuid
 
@@ -171,6 +172,74 @@ def test_queue_sink_failure_classification(spark, envelopes, tmp_path):
         Exception, match=r"AllItemsFailureError: all \d+ messages failed"
     ):
         queue_sink(fail_all, max_message_size=512)(batch, 0)
+
+
+def _message_factory(out_dir: str):
+    """Picklable transport factory: each send writes its message bodies
+    as one JSON list, so message boundaries survive."""
+
+    def make() -> QueueTransport:
+        os.makedirs(out_dir, exist_ok=True)
+
+        def send(batch):
+            with open(os.path.join(out_dir, uuid.uuid4().hex), "w") as fh:
+                json.dump([m.body for m in batch], fh)
+            return []
+
+        return QueueTransport(send_batch=send)
+
+    return make
+
+
+def _messages(out_dir: str) -> list[str]:
+    return sorted(
+        body for f in glob.glob(f"{out_dir}/*") for body in json.load(open(f))
+    )
+
+
+def test_queue_sink_byte_bound_is_utf8(spark, tmp_path):
+    """The message-size bound counts UTF-8 bytes, separators included:
+    a 668-byte record of 300 "é" (368 characters) goes alone under a
+    1,024-byte bound, where counting characters packed three records
+    into a 2,006-byte message."""
+    rows = [("ks", f"{i:04d}", "é" * 300) for i in range(40)]
+    batch = spark.createDataFrame(
+        rows,
+        "stream_keyspace_name string, stream_sequence_number string, v string",
+    )
+    out = str(tmp_path / "utf8")
+    queue_sink(_message_factory(out), max_message_size=1024)(batch, 0)
+    sizes = [len(body.encode("utf-8")) for body in _messages(out)]
+    assert sizes == [668] * 40
+
+
+def test_queue_sink_one_stage_and_replay(spark, env_parquet, tmp_path):
+    """A file-sourced batch packs and sends in one Spark job of one
+    stage (no exchange), and a replayed batch delivers the same
+    message bodies."""
+    path, schema = env_parquet
+    batch = CdcPipeline(PipelineConfig()).transform(
+        spark.read.schema(schema).parquet(path)
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    delivered = []
+    for attempt in range(2):
+        out = str(tmp_path / f"replay{attempt}")
+        group = f"queue-sink-plan-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "queue sink plan shape")
+        try:
+            queue_sink(_message_factory(out), max_message_size=4096)(batch, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = tracker.getJobIdsForGroup(group)
+        assert len(jobs) == 1
+        assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+        delivered.append(_messages(out))
+    assert delivered[0] == delivered[1]
+    recs = [json.loads(r) for body in delivered[0] for r in body.split("\n")]
+    assert len(recs) == 200
+    assert len({r["stream_sequence_number"] for r in recs}) == 200
 
 
 def test_watermark_windowed_stream_matches_batch(spark, sf_dir, tmp_path):
